@@ -129,40 +129,6 @@ object Probe {
       s"pairsEmitted=${capped.map(d => d * (d - 1) / 2).sum}")
   }
 
-  /** ccLabels fill phases: the q31 edge pass vs the propagation. */
-  private def cc(spark: SparkSession, dir: String): Unit = {
-    warmup(spark, Seq("q31_ngram_jaccard", "q35_dup_clusters"))
-    val edges = timed(spark, "cc/q31-edges") {
-      val e = graft.operators.Dedup.q31(spark, dir)
-        .select(col("ia"), col("ib")).localCheckpoint()
-      Console.err.println("  edges = " + e.count())
-      e
-    }
-    timed(spark, "cc/label-propagation") {
-      val sym = edges.unionAll(
-        edges.select(col("ib").as("ia"), col("ia").as("ib")))
-        .toDF("a", "b")
-      var labels = sym.select(col("a").as("node")).distinct()
-        .withColumn("comp", col("node")).localCheckpoint()
-      var labelSum = Long.MaxValue
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < 20) {
-        val viaEdges = sym.join(labels, sym("a") === labels("node"))
-          .select(col("b").as("node"), col("comp"))
-        val next = labels.select(col("node"), col("comp")).unionAll(viaEdges)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp"))
-          .localCheckpoint()
-        val nextSum = next.agg(sum(col("comp"))).head.getLong(0)
-        converged = nextSum == labelSum
-        labelSum = nextSum
-        labels = next
-        rounds += 1
-      }
-      Console.err.println(s"  rounds = $rounds")
-    }
-  }
-
   /** q76 phases: variant emission vs pair emission vs rejoin+sort. */
   private def fuzzy(spark: SparkSession, dir: String): Unit = {
     warmup(spark, Seq("q76_fuzzy_match2"))
@@ -247,7 +213,6 @@ object Probe {
       case "tri" => tri(spark, dir)
       case "img" => img(spark, dir)
       case "img2" => img2(spark, dir)
-      case "cc" => cc(spark, dir)
       case "fuzzy" => fuzzy(spark, dir)
       case "fuzzy2" => fuzzy2(spark, dir)
       case s if SparkEntry.queries.contains(s) => one(spark, dir, s)

@@ -69,63 +69,8 @@ object Graph {
     * trick applied to a fixpoint loop).
     */
   def q121(spark: SparkSession, dir: String, iters: Int = 5,
-      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    // one row per trading pair, session-cached (round 14) — the
-    // fact-table join + aggregate used to re-run per execution
-    val pairs = purchasePairs(spark, dir)
-    // round 15: below the edge bound the whole fixpoint runs on the
-    // driver (the q135/BPE local-vs-distributed dispatch — in this
-    // regime the rank relation broadcasts every round anyway, and the
-    // five chained rounds were paying scheduler latency to move a
-    // node-sized int64 vector). Identical arithmetic; GraphSpec's
-    // imperative twin and the forced-distributed arm pin equality.
-    if (pairs.count() <= localMaxEdges)
-      return pagerankLocal(spark, pairs, iters, personalized = false)
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"),
-        col("w"))
-      .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst"),
-        col("w")))
-    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-    // (src, dst, w, deg) — the one relation every round joins,
-    // HASH-PARTITIONED ON src by the explicit repartition. Round 14:
-    // the persist/unpersist pair is gone along with the per-round
-    // checkpoints — with all five rounds in ONE plan, every round's
-    // join references the structurally identical ew subtree, so
-    // ReuseExchange computes the repartition exchange once and later
-    // rounds read its shuffle files (the same one-edge-shuffle-total
-    // guarantee the persisted relation gave, without pinning executor
-    // storage; at 1e9 nodes shuffle files spill to disk gracefully
-    // where a pinned relation would evict).
-    val ew = edges.join(deg, Seq("src"))
-      .repartition(col("src"))
-
-    val base = (15L * PrScale) / DampDen
-    // the rounds CHAIN without materialization barriers (round 14):
-    // each round's ranks feed exactly ONE consumer (the next round),
-    // so there is no multi-consumer re-expansion to guard against
-    // (the q75 codegen lesson does not apply) and no per-round driver
-    // read (unlike q35/q124's convergence probes) — per-round
-    // localCheckpoint was 5 extra materialization jobs + scheduler
-    // barriers per execution. All five rounds now run as ONE job whose
-    // stages pipeline; AQE still broadcasts the node-sized ranks side
-    // per round from runtime stage stats.
-    var ranks = deg.select(col("src").as("node"), lit(PrScale).as("pr"))
-    for (_ <- 1 to iters) {
-      ranks = ew.join(ranks, ew("src") === ranks("node"))
-        .selectExpr("dst",
-          s"w * (($DampNum * pr) div ($DampDen * deg)) AS contrib")
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("inflow"))
-        .select(col("dst").as("node"), (lit(base) + col("inflow")).as("pr"))
-    }
-    ranks
-      .select(col("node"),
-        when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
-          .as("kind"),
-        (col("node") / 2).cast("long").as("key"),
-        col("pr"))
-      .orderBy(col("pr").desc, col("node"))
-  }
+      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame =
+    pagerank(spark, dir, iters, personalized = false, localMaxEdges)
 
   /** q125: PERSONALIZED PageRank over the purchase graph — teleport
     * mass restarts at a SEED SET instead of everywhere, so scores
@@ -144,55 +89,37 @@ object Graph {
     * per-round base term (`(15·SCALE) DIV 100` on seeds, 0
     * elsewhere). The symmetric closure gives every node an in-edge,
     * so the per-round groupBy(dst) covers EVERY node — zero-rank
-    * nodes contribute 0-valued rows, not absent rows — and the
-    * base relation joins back without an outer join.
+    * nodes contribute 0-valued rows, not absent rows — and the base
+    * term is an inline column on `dst`, with no base relation to join.
     *
-    * Spark shape: identical to q121 — one persisted hash-partitioned
-    * edge relation, per round one join + one int64 sum, plus one
-    * node-sized base join (broadcast at bench scale; key-partitioned
-    * like the ranks side at 1e9 nodes). Oracle: the same five rounds
-    * unrolled as chained DuckDB CTEs.
+    * Spark shape: [[q121]]'s — one body serves both, with the seed
+    * predicate as the only switch. Oracle: the same five rounds
+    * unrolled as chained DuckDB CTEs (those join a base relation, the
+    * equivalent written form).
     */
   def q125(spark: SparkSession, dir: String, iters: Int = 5,
-      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    val pairs = purchasePairs(spark, dir) // session-cached, see q121
-    if (pairs.count() <= localMaxEdges) // see q121's dispatch note
-      return pagerankLocal(spark, pairs, iters, personalized = true)
-    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"),
-        col("w"))
-      .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst"),
-        col("w")))
-    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
-    // one reused exchange across the chained rounds — see q121's note
-    val ew = edges.join(deg, Seq("src"))
-      .repartition(col("src"))
-    val baseUnit = (15L * PrScale) / DampDen
-    // node-sized (node, base) relation: teleport mass lands on seeds
-    // only; built once, CHECKPOINTED (it stays multi-consumer — the
-    // initial vector plus every round's base join — so the barrier
-    // still guards against re-expansion), joined back every round
-    // (`div` keeps the suppkey recovery in int64 — `/` would go
-    // double). The per-round ranks checkpoints are gone (round 14):
-    // each round feeds exactly one consumer, so the rounds chain into
-    // one job exactly as in q121.
-    val baseRel = deg.select(col("src").as("node"))
-      .withColumn("base",
-        when(expr("node % 2 = 1 AND ((node - 1) div 2) % 10 = 3"),
-          lit(baseUnit)).otherwise(lit(0L)))
-      .localCheckpoint()
-    var ranks = baseRel
-      .select(col("node"),
-        when(col("base") > 0, lit(PrScale)).otherwise(lit(0L)).as("pr"))
-    for (_ <- 1 to iters) {
-      val inflow = ew.join(ranks, ew("src") === ranks("node"))
-        .selectExpr("dst",
-          s"w * (($DampNum * pr) div ($DampDen * deg)) AS contrib")
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("inflow"))
-      ranks = inflow
-        .join(baseRel, inflow("dst") === baseRel("node"))
-        .select(col("node"), (col("base") + col("inflow")).as("pr"))
-    }
+      localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame =
+    pagerank(spark, dir, iters, personalized = true, localMaxEdges)
+
+  /** The one PageRank body behind [[q121]] and [[q125]]: dispatch on
+    * the edge count to [[pagerankLocal]] or [[pagerankRounds]] (both
+    * return `(node, pr)`), then project and order the result once.
+    */
+  private def pagerank(spark: SparkSession, dir: String, iters: Int,
+      personalized: Boolean, localMaxEdges: Long): DataFrame = {
+    // one row per trading pair, session-cached (round 14) — the
+    // fact-table join + aggregate used to re-run per execution
+    val pairs = purchasePairs(spark, dir)
+    // round 15: below the edge bound the whole fixpoint runs on the
+    // driver (the q135/BPE local-vs-distributed dispatch — in this
+    // regime the rank relation broadcasts every round anyway, and the
+    // five chained rounds were paying scheduler latency to move a
+    // node-sized int64 vector). Identical arithmetic; GraphSpec's
+    // imperative twin and the forced-distributed arm pin equality.
+    val ranks =
+      if (pairs.count() <= localMaxEdges)
+        pagerankLocal(spark, pairs, iters, personalized)
+      else pagerankRounds(pairs, iters, personalized)
     ranks
       .select(col("node"),
         when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
@@ -200,6 +127,60 @@ object Graph {
         (col("node") / 2).cast("long").as("key"),
         col("pr"))
       .orderBy(col("pr").desc, col("node"))
+  }
+
+  /** Distributed arm of [[pagerank]]: the chained join/aggregate
+    * rounds. Teleport mass lands everywhere ([[q121]]) or on the seed
+    * decile only ([[q125]]); both the initial vector and the per-round
+    * base term are inline columns.
+    */
+  private def pagerankRounds(pairs: DataFrame, iters: Int,
+      personalized: Boolean): DataFrame = {
+    val edges = pairs.select(col("cnode").as("src"), col("snode").as("dst"),
+        col("w"))
+      .unionAll(pairs.select(col("snode").as("src"), col("cnode").as("dst"),
+        col("w")))
+    val deg = edges.groupBy(col("src")).agg(sum(col("w")).as("deg"))
+    // (src, dst, w, deg) — the one relation every round joins,
+    // HASH-PARTITIONED ON src by the explicit repartition. Round 14:
+    // the persist/unpersist pair is gone along with the per-round
+    // checkpoints — with all rounds in ONE plan, every round's
+    // join references the structurally identical ew subtree, so
+    // ReuseExchange computes the repartition exchange once and later
+    // rounds read its shuffle files (the same one-edge-shuffle-total
+    // guarantee the persisted relation gave, without pinning executor
+    // storage; at 1e9 nodes shuffle files spill to disk gracefully
+    // where a pinned relation would evict).
+    val ew = edges.join(deg, Seq("src"))
+      .repartition(col("src"))
+    // `v` on teleport targets, 0 elsewhere (`div` keeps the suppkey
+    // recovery in int64 — `/` would go double)
+    def onSeeds(node: String, v: Long) =
+      if (!personalized) lit(v)
+      else when(expr(s"$node % 2 = 1 AND (($node - 1) div 2) % 10 = 3"),
+        lit(v)).otherwise(lit(0L))
+    val base = (15L * PrScale) / DampDen
+    // the rounds CHAIN without materialization barriers (round 14):
+    // each round's ranks feed exactly ONE consumer (the next round),
+    // so there is no multi-consumer re-expansion to guard against
+    // (the q75 codegen lesson does not apply) and no per-round driver
+    // read (unlike q124's convergence probes) — per-round
+    // localCheckpoint was 5 extra materialization jobs + scheduler
+    // barriers per execution. All rounds now run as ONE job whose
+    // stages pipeline; AQE still broadcasts the node-sized ranks side
+    // per round from runtime stage stats.
+    var ranks = deg.select(col("src").as("node"),
+      onSeeds("src", PrScale).as("pr"))
+    for (_ <- 1 to iters) {
+      ranks = ew.join(ranks, ew("src") === ranks("node"))
+        .selectExpr("dst",
+          s"w * (($DampNum * pr) div ($DampDen * deg)) AS contrib")
+        .groupBy(col("dst"))
+        .agg(sum(col("contrib")).as("inflow"))
+        .select(col("dst").as("node"),
+          (onSeeds("dst", base) + col("inflow")).as("pr"))
+    }
+    ranks
   }
 
   val q125Sql: String = {
@@ -245,60 +226,45 @@ object Graph {
        |ORDER BY pr DESC, node""".stripMargin
   }
 
-  /** Driver-local arm of [[q121]]/[[q125]]: the identical int64
-    * update over dense-indexed edge arrays — contrib(u→v) =
-    * w × ((85·pr(u)) div (100·deg(u))), pr'(v) = base(v) + Σ inflow —
-    * with the personalized variant differing only in the initial
-    * vector and the seed-restricted base, exactly as the distributed
-    * rounds. Integer sums are order-independent, so the arms are
-    * bit-identical (spec-pinned, plus GraphSpec's pre-existing
-    * imperative twins).
+  /** Driver-local arm of [[pagerank]]: the identical int64 update
+    * over [[DenseEdges]] — contrib(u→v) = w × ((85·pr(u)) div
+    * (100·deg(u))) along both directions of every pair, pr'(v) =
+    * base(v) + Σ inflow — with the personalized variant differing only
+    * in the initial vector and the seed-restricted base, exactly as
+    * [[pagerankRounds]]. Integer sums are order-independent, so the
+    * arms are bit-identical (spec-pinned, plus GraphSpec's imperative
+    * twins).
     */
   private def pagerankLocal(spark: SparkSession, pairs: DataFrame,
       iters: Int, personalized: Boolean): DataFrame = {
     import spark.implicits._
-    val rows = pairs.select(col("cnode"), col("snode"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val id2ix = new scala.collection.mutable.LongMap[Int](nP * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = ids.length; id2ix(id) = i; ids += id; i }
-    }
-    val eSrc = new Array[Int](2 * nP)
-    val eDst = new Array[Int](2 * nP)
-    val eW = new Array[Long](2 * nP)
+    val g = denseEdges(pairs.select(col("cnode"), col("snode"), col("w")))
+    val nN = g.nNodes
+    val deg = new Array[Long](nN)
     var k = 0
-    while (k < nP) {
-      val c = ix(rows(k).getLong(0)); val s = ix(rows(k).getLong(1))
-      val w = rows(k).getLong(2)
-      eSrc(2 * k) = c; eDst(2 * k) = s; eW(2 * k) = w
-      eSrc(2 * k + 1) = s; eDst(2 * k + 1) = c; eW(2 * k + 1) = w
+    while (k < g.nEdges) {
+      deg(g.a(k)) += g.w(k); deg(g.b(k)) += g.w(k)
       k += 1
     }
-    val nN = ids.length
-    val deg = new Array[Long](nN)
-    k = 0
-    while (k < 2 * nP) { deg(eSrc(k)) += eW(k); k += 1 }
     val baseUnit = (15L * PrScale) / DampDen
     def isSeed(id: Long): Boolean = id % 2 == 1 && ((id - 1) / 2) % 10 == 3
     val base = new Array[Long](nN)
     var pr = new Array[Long](nN)
     var i = 0
     while (i < nN) {
-      if (!personalized) { base(i) = baseUnit; pr(i) = PrScale }
-      else if (isSeed(ids(i))) { base(i) = baseUnit; pr(i) = PrScale }
+      if (!personalized || isSeed(g.ids(i))) {
+        base(i) = baseUnit; pr(i) = PrScale
+      }
       i += 1
     }
     var it = 0
     while (it < iters) {
       val next = new Array[Long](nN)
       k = 0
-      while (k < 2 * nP) {
-        val s = eSrc(k)
-        next(eDst(k)) += eW(k) * ((DampNum * pr(s)) / (DampDen * deg(s)))
+      while (k < g.nEdges) {
+        val a = g.a(k); val b = g.b(k)
+        next(b) += g.w(k) * ((DampNum * pr(a)) / (DampDen * deg(a)))
+        next(a) += g.w(k) * ((DampNum * pr(b)) / (DampDen * deg(b)))
         k += 1
       }
       i = 0
@@ -306,15 +272,7 @@ object Graph {
       pr = next
       it += 1
     }
-    val out = Vector.newBuilder[(Long, String, Long, Long)]
-    i = 0
-    while (i < nN) {
-      val id = ids(i)
-      out += ((id, if (id % 2 == 0) "cust" else "supp", id / 2, pr(i)))
-      i += 1
-    }
-    spark.createDataset(out.result()).toDF("node", "kind", "key", "pr")
-      .orderBy(col("pr").desc, col("node"))
+    spark.createDataset(g.ids.toSeq.zip(pr)).toDF("node", "pr")
   }
 
   /** q122: per-node triangle counts over the part co-order graph —
@@ -1220,6 +1178,43 @@ object Graph {
     wd.orderBy(col("node"))
   }
 
+  /** A collected edge relation over a dense node index — the block
+    * every driver-local graph arm starts from. Edge `k` joins dense
+    * nodes `a(k)` and `b(k)` with weight `w(k)`; `ids(i)` is dense
+    * node `i`'s int64 id, indices assigned in first-seen order.
+    */
+  private final class DenseEdges(val a: Array[Int], val b: Array[Int],
+      val w: Array[Long], val ids: Array[Long]) {
+    def nEdges: Int = a.length
+    def nNodes: Int = ids.length
+  }
+
+  /** Collect `edges` — positional `(a, b)` or `(a, b, w)` int64
+    * columns; weights are 0 without the third — into [[DenseEdges]].
+    */
+  private def denseEdges(edges: DataFrame): DenseEdges = {
+    val rows = edges.queryExecution.executedPlan.executeCollect()
+    val weighted = edges.columns.length > 2
+    val nE = rows.length
+    val id2ix = new scala.collection.mutable.LongMap[Int](nE * 2)
+    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
+    def ix(id: Long): Int = {
+      val got = id2ix.getOrElse(id, -1)
+      if (got >= 0) got
+      else { val i = ids.length; id2ix(id) = i; ids += id; i }
+    }
+    val a = new Array[Int](nE)
+    val b = new Array[Int](nE)
+    val w = new Array[Long](nE)
+    var k = 0
+    while (k < nE) {
+      a(k) = ix(rows(k).getLong(0)); b(k) = ix(rows(k).getLong(1))
+      if (weighted) w(k) = rows(k).getLong(2)
+      k += 1
+    }
+    new DenseEdges(a, b, w, ids.toArray)
+  }
+
   /** Dense-indexed weighted symmetric graph with the [[peelToCore]]
     * loop on primitive arrays — the driver-local arm shared by
     * [[kcoreOn]] and [[coreLevelsOn]]. Mirrors the distributed loop
@@ -1229,39 +1224,19 @@ object Graph {
     * converged when nothing drops, strict throws the same message.
     */
   private final class WGraphLocal(pairs: DataFrame) {
-    private val rows = pairs.select(col("a"), col("b"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    private val id2ix = new scala.collection.mutable.LongMap[Int](rows.length * 2)
-    private val idsBuf = new scala.collection.mutable.ArrayBuffer[Long]()
-    private def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = idsBuf.length; id2ix(id) = i; idsBuf += id; i }
-    }
-    private val nP = rows.length
-    private val eA = new Array[Int](nP)
-    private val eB = new Array[Int](nP)
-    private val eW = new Array[Long](nP)
-    locally {
-      var k = 0
-      while (k < nP) {
-        eA(k) = ix(rows(k).getLong(0)); eB(k) = ix(rows(k).getLong(1))
-        eW(k) = rows(k).getLong(2)
-        k += 1
-      }
-    }
-    val ids: Array[Long] = idsBuf.toArray
-    val nNodes: Int = ids.length
+    private val g = denseEdges(pairs.select(col("a"), col("b"), col("w")))
+    val ids: Array[Long] = g.ids
+    val nNodes: Int = g.nNodes
 
     /** (wdeg, hasAlivePeer) within the alive-induced subgraph. */
     def wdegWithin(alive: Array[Boolean]): (Array[Long], Array[Boolean]) = {
       val wd = new Array[Long](nNodes)
       val has = new Array[Boolean](nNodes)
       var k = 0
-      while (k < nP) {
-        val a = eA(k); val b = eB(k)
+      while (k < g.nEdges) {
+        val a = g.a(k); val b = g.b(k)
         if (alive(a) && alive(b)) {
-          wd(a) += eW(k); wd(b) += eW(k)
+          wd(a) += g.w(k); wd(b) += g.w(k)
           has(a) = true; has(b) = true
         }
         k += 1
@@ -1580,44 +1555,31 @@ object Graph {
   private def bfsLocal(spark: SparkSession, pairs: DataFrame,
       maxHops: Int): Option[DataFrame] = {
     import spark.implicits._
-    val rows = pairs.select(col("cnode"), col("snode"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val id2ix = new scala.collection.mutable.LongMap[Int](nP * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long]()
-    def ix(id: Long): Int = {
-      val got = id2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = ids.length; id2ix(id) = i; ids += id; i }
-    }
-    val eA = new Array[Int](nP); val eB = new Array[Int](nP)
-    var k = 0
-    while (k < nP) {
-      eA(k) = ix(rows(k).getLong(0)); eB(k) = ix(rows(k).getLong(1))
-      k += 1
-    }
-    val nN = ids.length
+    val g = denseEdges(pairs.select(col("cnode"), col("snode")))
+    val nN = g.nNodes
     var seed = -1
     var seedId = Long.MaxValue
     var i = 0
     while (i < nN) {
-      if (ids(i) % 2 == 1 && ids(i) < seedId) { seedId = ids(i); seed = i }
+      val id = g.ids(i)
+      if (id % 2 == 1 && id < seedId) { seedId = id; seed = i }
       i += 1
     }
     if (seed < 0) return None
     // CSR over the symmetric closure
     val degC = new Array[Int](nN)
-    k = 0
-    while (k < nP) { degC(eA(k)) += 1; degC(eB(k)) += 1; k += 1 }
+    var k = 0
+    while (k < g.nEdges) { degC(g.a(k)) += 1; degC(g.b(k)) += 1; k += 1 }
     val off = new Array[Int](nN + 1)
     i = 0
     while (i < nN) { off(i + 1) = off(i) + degC(i); i += 1 }
-    val adj = new Array[Int](2 * nP)
+    val adj = new Array[Int](2 * g.nEdges)
     val fill = new Array[Int](nN)
     k = 0
-    while (k < nP) {
-      adj(off(eA(k)) + fill(eA(k))) = eB(k); fill(eA(k)) += 1
-      adj(off(eB(k)) + fill(eB(k))) = eA(k); fill(eB(k)) += 1
+    while (k < g.nEdges) {
+      val a = g.a(k); val b = g.b(k)
+      adj(off(a) + fill(a)) = b; fill(a) += 1
+      adj(off(b) + fill(b)) = a; fill(b) += 1
       k += 1
     }
     val hops = Array.fill(nN)(-1)
@@ -1643,7 +1605,7 @@ object Graph {
     val out = Vector.newBuilder[(Long, Int)]
     i = 0
     while (i < nN) {
-      if (hops(i) >= 0) out += ((ids(i), hops(i)))
+      if (hops(i) >= 0) out += ((g.ids(i), hops(i)))
       i += 1
     }
     Some(spark.createDataset(out.result()).toDF("node", "hops")
@@ -1760,18 +1722,19 @@ object Graph {
   private[graft] def hitsFixed(spark: SparkSession, dir: String,
       iters: Int, broadcastMaxRows: Long,
       localMaxEdges: Long = BroadcastEdgeMaxRows): DataFrame = {
-    // the session-cached weighted pair relation under the bijective
-    // re-keying (cnode = cust×2, snode = supp×2+1 ⇒ COUNT per pair
-    // invariant; `div` keeps int64) — already materialized, so the
-    // per-query persist/unpersist pair is gone with the rebuild
     val pairs = purchasePairs(spark, dir)
-      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
     // round 15: below the edge bound the mutual-reinforcement rounds
     // run on the driver (the q121/q135 dispatch note) — each
     // distributed half-round was a join + sum + 1-row total +
     // checkpoint over node-sized int64 vectors
-    if (purchasePairs(spark, dir).count() <= localMaxEdges)
+    if (pairs.count() <= localMaxEdges)
       return hitsLocal(spark, pairs, iters)
+    // the session-cached weighted pair relation under the bijective
+    // re-keying (cnode = cust×2, snode = supp×2+1 ⇒ COUNT per pair
+    // invariant; `div` keeps int64) — already materialized, so the
+    // per-query persist/unpersist pair is gone with the rebuild
+    val byKey = pairs
+      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
     def renorm(df: DataFrame, key: String, raw: String,
         out: String): DataFrame = {
       val tot = df.agg(sum(col(raw)).as("t"))
@@ -1779,7 +1742,7 @@ object Graph {
         .selectExpr(key,
           s"$raw div greatest(1L, t div ${HitsScale}L) AS $out")
     }
-    var hub = pairs.select(col("cust")).distinct()
+    var hub = byKey.select(col("cust")).distinct()
       .withColumn("h", lit(HitsScale))
       .localCheckpoint()
     // dispatch once, on the initial hub count (node-sized, fixed for
@@ -1789,11 +1752,11 @@ object Graph {
       if (useBroadcast) broadcast(df) else df
     var auth: DataFrame = null
     for (_ <- 1 to iters) {
-      val araw = pairs.join(side(hub), Seq("cust"))
+      val araw = byKey.join(side(hub), Seq("cust"))
         .select(col("supp"), (col("w") * col("h")).as("c"))
         .groupBy(col("supp")).agg(sum(col("c")).as("araw"))
       auth = renorm(araw, "supp", "araw", "a").localCheckpoint()
-      val hraw = pairs.join(side(auth), Seq("supp"))
+      val hraw = byKey.join(side(auth), Seq("supp"))
         .select(col("cust"), (col("w") * col("a")).as("c"))
         .groupBy(col("cust")).agg(sum(col("c")).as("hraw"))
       hub = renorm(hraw, "cust", "hraw", "h").localCheckpoint()
@@ -1806,146 +1769,49 @@ object Graph {
   }
 
   /** Driver-local arm of [[q126]]: the identical int64-grid
-    * mutual-reinforcement rounds over dense-indexed arrays —
-    * araw(s) = Σ w·h(c), renorm x ↦ x div max(1, Σx div SCALE),
-    * then the hub half-round; integer sums are order-free so the
-    * arms are bit-identical (spec-pinned).
+    * mutual-reinforcement rounds over [[DenseEdges]] of the
+    * `(cnode, snode, w)` pairs — araw(s) = Σ w·h(c), renorm x ↦
+    * x div max(1, Σx div SCALE), then the hub half-round. Hub and
+    * authority vectors span the one node index: customer slots hold
+    * the only nonzero hub entries and supplier slots the only nonzero
+    * authority entries, so each renorm total covers its own side.
+    * `key = node div 2` recovers custkey and suppkey alike. Integer
+    * sums are order-free so the arms are bit-identical (spec-pinned).
     */
   private def hitsLocal(spark: SparkSession, pairs: DataFrame,
       iters: Int): DataFrame = {
     import spark.implicits._
-    val rows = pairs.select(col("cust"), col("supp"), col("w"))
-      .queryExecution.executedPlan.executeCollect()
-    val nP = rows.length
-    val c2ix = new scala.collection.mutable.LongMap[Int](nP)
-    val s2ix = new scala.collection.mutable.LongMap[Int](nP)
-    val custIds = new scala.collection.mutable.ArrayBuffer[Long]()
-    val suppIds = new scala.collection.mutable.ArrayBuffer[Long]()
-    def cix(id: Long): Int = {
-      val got = c2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = custIds.length; c2ix(id) = i; custIds += id; i }
-    }
-    def six(id: Long): Int = {
-      val got = s2ix.getOrElse(id, -1)
-      if (got >= 0) got
-      else { val i = suppIds.length; s2ix(id) = i; suppIds += id; i }
-    }
-    val eC = new Array[Int](nP); val eS = new Array[Int](nP)
-    val eW = new Array[Long](nP)
-    var k = 0
-    while (k < nP) {
-      eC(k) = cix(rows(k).getLong(0)); eS(k) = six(rows(k).getLong(1))
-      eW(k) = rows(k).getLong(2)
-      k += 1
-    }
-    val nC = custIds.length; val nS = suppIds.length
+    val g = denseEdges(pairs.select(col("cnode"), col("snode"), col("w")))
+    val nN = g.nNodes
     def renorm(x: Array[Long]): Array[Long] = {
       var t = 0L
       var i = 0
-      while (i < x.length) { t += x(i); i += 1 }
+      while (i < nN) { t += x(i); i += 1 }
       val d = math.max(1L, t / HitsScale)
       i = 0
-      while (i < x.length) { x(i) = x(i) / d; i += 1 }
+      while (i < nN) { x(i) = x(i) / d; i += 1 }
       x
     }
-    var hub = Array.fill(nC)(HitsScale)
-    var auth: Array[Long] = null
+    var hub = Array.tabulate(nN)(i => if (g.ids(i) % 2 == 0) HitsScale else 0L)
+    var auth = new Array[Long](nN)
     var it = 0
     while (it < iters) {
-      val araw = new Array[Long](nS)
-      k = 0
-      while (k < nP) { araw(eS(k)) += eW(k) * hub(eC(k)); k += 1 }
+      val araw = new Array[Long](nN)
+      var k = 0
+      while (k < g.nEdges) { araw(g.b(k)) += g.w(k) * hub(g.a(k)); k += 1 }
       auth = renorm(araw)
-      val hraw = new Array[Long](nC)
+      val hraw = new Array[Long](nN)
       k = 0
-      while (k < nP) { hraw(eC(k)) += eW(k) * auth(eS(k)); k += 1 }
+      while (k < g.nEdges) { hraw(g.a(k)) += g.w(k) * auth(g.b(k)); k += 1 }
       hub = renorm(hraw)
       it += 1
     }
-    val out = Vector.newBuilder[(String, Long, Long)]
-    var i = 0
-    while (i < nC) { out += (("hub", custIds(i), hub(i))); i += 1 }
-    i = 0
-    while (i < nS) { out += (("auth", suppIds(i), auth(i))); i += 1 }
-    spark.createDataset(out.result()).toDF("kind", "key", "score")
+    val out = Vector.tabulate(nN) { i =>
+      val id = g.ids(i)
+      if (id % 2 == 0) ("hub", id / 2, hub(i)) else ("auth", id / 2, auth(i))
+    }
+    spark.createDataset(out).toDF("kind", "key", "score")
       .orderBy(col("kind"), col("score").desc, col("key"))
-  }
-
-  /** [[q126]]'s convergence-tracked variant (round 12, the r11 §7f
-    * candidate): the same int64-grid mutual-reinforcement rounds, but
-    * the driver STOPS when the joint hub+auth RANKING is unchanged
-    * between consecutive rounds — rank order is what consumers read
-    * (top-k hubs/authorities), and it stabilizes before the grid
-    * scores do. Returns `(scores, roundsRun)`.
-    *
-    * Stopping probe, exactly (no hash shortcuts): rank both sides'
-    * scores jointly (`rank() OVER (ORDER BY score DESC, kind, key)` —
-    * a node-sized global sort, NOT edge-sized; the same cost class as
-    * the final orderBy every graph query already pays), join this
-    * round's ranks to the previous round's on (kind, key), and count
-    * rank changes — one node-sized join + a 1-row count per round,
-    * driver sees a single long. The FIXED-round [[q126]] remains the
-    * oracle gate twin: this variant is library API for pipelines that
-    * want "iterate to stability" semantics with a bounded budget
-    * (`maxIters` throws rather than silently returning an
-    * unstabilized ranking — the q129 strict discipline).
-    */
-  def hitsConverged(spark: SparkSession, dir: String,
-      maxIters: Int = 12): (DataFrame, Int) = {
-    val pairs = purchasePairs(spark, dir) // session-cached, see hitsFixed
-      .selectExpr("cnode div 2 AS cust", "(snode - 1) div 2 AS supp", "w")
-    def renorm(df: DataFrame, key: String, raw: String,
-        out: String): DataFrame = {
-      val tot = df.agg(sum(col(raw)).as("t"))
-      df.crossJoin(broadcast(tot))
-        .selectExpr(key,
-          s"$raw div greatest(1L, t div ${HitsScale}L) AS $out")
-    }
-    def scores(hub: DataFrame, auth: DataFrame): DataFrame =
-      hub.select(lit("hub").as("kind"), col("cust").as("key"),
-          col("h").as("score"))
-        .unionAll(auth.select(lit("auth").as("kind"),
-          col("supp").as("key"), col("a").as("score")))
-    def ranking(sc: DataFrame): DataFrame =
-      sc.select(col("kind"), col("key"),
-        rank().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("score").desc, col("kind"), col("key")))
-          .as("rnk")).localCheckpoint()
-    var hub = pairs.select(col("cust")).distinct()
-      .withColumn("h", lit(HitsScale))
-      .localCheckpoint()
-    // the q126 dispatch: broadcast the node-sized rank side below the
-    // bound so the pair relation never exchanges
-    val useBroadcast = hub.count() <= BroadcastEdgeMaxRows
-    def side(df: DataFrame): DataFrame =
-      if (useBroadcast) broadcast(df) else df
-    var auth: DataFrame = null
-    var prevRank: DataFrame = null
-    var rounds = 0
-    var stable = false
-    while (!stable && rounds < maxIters) {
-      val araw = pairs.join(side(hub), Seq("cust"))
-        .select(col("supp"), (col("w") * col("h")).as("c"))
-        .groupBy(col("supp")).agg(sum(col("c")).as("araw"))
-      auth = renorm(araw, "supp", "araw", "a").localCheckpoint()
-      val hraw = pairs.join(side(auth), Seq("supp"))
-        .select(col("cust"), (col("w") * col("a")).as("c"))
-        .groupBy(col("cust")).agg(sum(col("c")).as("hraw"))
-      hub = renorm(hraw, "cust", "hraw", "h").localCheckpoint()
-      rounds += 1
-      val curRank = ranking(scores(hub, auth))
-      if (prevRank != null)
-        stable = curRank.as("c")
-          .join(prevRank.as("p"), Seq("kind", "key"))
-          .filter(col("c.rnk") =!= col("p.rnk")).isEmpty
-      prevRank = curRank
-    }
-    if (!stable) throw new IllegalStateException(
-      s"HITS ranking not stabilized within $maxIters rounds — raise " +
-        "the budget for this graph")
-    (scores(hub, auth)
-      .orderBy(col("kind"), col("score").desc, col("key")), rounds)
   }
 
   val q126Sql: String = {

@@ -275,7 +275,7 @@ final class SshServer(root: Path, users: Map[String, String],
     private final class OpenFile(val raf: RandomAccessFile,
       val append: Boolean)
     private val files = mutable.Map[String, OpenFile]()
-    private val dirs = mutable.Map[String, Iterator[Path]]()
+    private val dirs = mutable.Map[String, Vector[Path]]()
 
     def closeAll(): Unit = {
       files.values.foreach(f => try f.raf.close() catch { case _: Throwable => () })
@@ -405,16 +405,17 @@ final class SshServer(root: Path, users: Map[String, String],
                   while (it.hasNext) b += it.next()
                   b.result()
                 } finally listing.close()
-              dirs(h) = entries.iterator
+              dirs(h) = entries
               new SshWriter().u8(Handle).u32(id).text(h).bytes
             }
           case Readdir =>
             val h = r.text()
             dirs.get(h) match {
               case None => status(id, StBadMessage, "bad handle")
-              case Some(it) if !it.hasNext => status(id, StEof, "eof")
-              case Some(it) =>
-                val batch = it.take(64).toSeq
+              case Some(rest) if rest.isEmpty => status(id, StEof, "eof")
+              case Some(rest) =>
+                val (batch, tail) = rest.splitAt(64)
+                dirs(h) = tail
                 val w = new SshWriter().u8(Name).u32(id)
                   .u32(batch.length.toLong)
                 batch.foreach { p =>

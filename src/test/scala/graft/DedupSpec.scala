@@ -69,23 +69,35 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("clusterLabels arms agree: driver union-find bit-equals min-label propagation") {
-    // round 15: below CcLocalMaxEdges the labels come from a driver
-    // union-find with min-id roots — pin bit-equality (doc_id,
-    // cluster_id, cluster_size) against the distributed propagation
-    // on the real near-dup graph plus a planted multi-component graph
+  test("clusterLabels arms agree: driver union-find bit-equals the star-round arm") {
+    // below CcLocalMaxEdges the labels come from a driver union-find
+    // with min-id roots — pin bit-equality (doc_id, cluster_id,
+    // cluster_size) against the distributed star-round arm on the
+    // real near-dup graph plus a planted multi-component graph. The
+    // arms are called directly: clusterLabelsBounded would answer
+    // from the session's ccLabels cache.
     val edges = Dedup.q31(spark, sf)
       .select(org.apache.spark.sql.functions.col("ia"),
         org.apache.spark.sql.functions.col("ib")).localCheckpoint()
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(rows(Dedup.ccLabelsLocal(spark, edges)) ===
-      rows(Dedup.ccLabelsPropagated(spark, edges)))
+      rows(Dedup.ccLabelsStar(edges)))
     import spark.implicits._
     val planted = Seq((7L, 3L), (3L, 9L), (12L, 15L), (20L, 21L),
       (21L, 22L), (22L, 20L)).toDF("ia", "ib").localCheckpoint()
     assert(rows(Dedup.ccLabelsLocal(spark, planted)) ===
-      rows(Dedup.ccLabelsPropagated(spark, planted)))
+      rows(Dedup.ccLabelsStar(planted)))
+  }
+
+  test("clusterLabels distributed arm: a 300-node chain is one component of size 300") {
+    // diameter 299 — min-label propagation would need 299 rounds;
+    // the star arm contracts it in O(log n)
+    val chain = spark.range(299).selectExpr("id AS ia", "id + 1 AS ib")
+    val labs = Dedup.ccLabelsStar(chain).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(labs.map(_._1).toSet === (0L to 299L).toSet)
+    assert(labs.forall(r => r._2 == 0L && r._3 == 300L))
   }
 
   test("large-star/small-star CC matches q35's labels and conquers a deep chain in log rounds") {
@@ -98,8 +110,8 @@ class DedupSpec extends SparkSpec {
     val prop = Dedup.q35(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("cluster_id")).toMap
     assert(star === prop)
-    // a 300-node chain has diameter 299: q35's propagation would need
-    // 299 rounds (its cap throws at 20); star rounds are logarithmic
+    // a 300-node chain has diameter 299: min-label propagation would
+    // need 299 rounds; star rounds are logarithmic
     val chain = spark.range(299).selectExpr("id AS x", "id + 1 AS y")
     val (lab, rounds) = Dedup.ccStarWithRounds(chain)
     assert(rounds <= 15, s"expected O(log n) rounds, took $rounds")

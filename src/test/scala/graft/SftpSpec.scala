@@ -188,6 +188,40 @@ class SftpSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("gsftp:// folders past one READDIR batch: a 150-file folder lists, downloads and deletes whole") {
+    import graft.blueprints.{Delete, Download}
+    val root = freshDir()
+    val srv = startServer(root)
+    try {
+      // the server answers READDIR in batches of 64 entries, so 150
+      // files take three batches before EOF
+      val names = (0 until 150).map(i => f"f$i%03d.txt")
+      Files.createDirectories(root.resolve("big"))
+      names.foreach(n => Files.writeString(root.resolve(s"big/$n"), n))
+      def args(extra: String*): Array[String] =
+        (Seq("--host", "127.0.0.1", "--port", srv.port.toString,
+          "--username", "tester", "--password", "secret",
+          "--protocol", "sftp", "--source-file-name-match-type",
+          "regex_match", "--source-folder-name", "big") ++ extra).toArray
+      val conf = spark.sparkContext.hadoopConfiguration
+      conf.set("fs.gsftp.impl", "graft.sources.ssh.GraftSftpFileSystem")
+      conf.set("fs.gsftp.impl.disable.cache", "true")
+      conf.set("fs.gsftp.user", "tester")
+      conf.set("fs.gsftp.password", "secret")
+      val listed = graft.sources.FileOps.listRecursive(spark,
+          s"gsftp://127.0.0.1:${srv.port}/big")
+        .select(col("path")).collect().map(_.getString(0).split('/').last)
+      assert(listed.sorted.toSeq === names)
+      val dl = freshDir()
+      assert(Download.run(spark, args("--source-file-name", "\\.txt$",
+        "--destination-folder-name", dl.toString)) == 0)
+      names.foreach(n => assert(Files.readString(dl.resolve(n)) == n, n))
+      assert(Delete.run(spark, args("--source-file-name", "\\.txt$")) == 0)
+      val left = Files.list(root.resolve("big"))
+      try assert(left.count() == 0L) finally left.close()
+    } finally srv.close()
+  }
+
   test("gsftp://: Spark reads and writes real formats through the adapter; parquet footer seek is native") {
     val root = freshDir()
     val srv = startServer(root)
