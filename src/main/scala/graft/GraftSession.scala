@@ -43,8 +43,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 /** Canonical session builder: the configuration every graft driver
   * (Verify, Bench, user apps) wants — AQE with skew handling, UTC,
-  * sensible local shuffle parallelism, graft SQL extensions, and the
-  * gftp:// connector registered.
+  * sensible local shuffle parallelism and graft SQL extensions. The
+  * gftp://, gftps:// and gsftp:// connectors need no session conf:
+  * `META-INF/services` registers them with Hadoop.
   */
 object GraftSession {
   def builder(master: String = "local[*]",
@@ -67,7 +68,5 @@ object GraftSession {
       // "every timestamp is a UTC instant" and the DuckDB oracle
       // reads the same files as naive-UTC
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.hadoop.fs.gftp.impl",
-        "graft.sources.ftp.GraftFtpFileSystem")
       .config("spark.ui.enabled", "false")
 }

@@ -1,10 +1,11 @@
 package graft.blueprints
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.GraftSession
 import graft.sources.{FileOps, PathUtils}
-import graft.sources.FileOps.{ErrorCodes, GraftFsError, Transfer}
+import graft.sources.FileOps.{ErrorCodes, GraftFsError}
 
 /** The reference blueprints' unit of use is a CLI job — these four
   * mains mirror them flag for flag (upload_file.py:11-48 argparse),
@@ -100,17 +101,13 @@ object Blueprints {
       truststorePassword = m.get("--truststore-password"))
   }
 
-  /** Configure the session's gftp connector for this job's server;
+  /** Configure the session's connector for this job's server;
     * credentials ride in the Hadoop conf (no URI-encoding pitfalls).
+    * The scheme's class comes from `META-INF/services`.
     */
   def ftpUri(spark: SparkSession, a: Args): String = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (scheme, impl) = a.protocol match {
-      case "ftps" => ("gftps", "graft.sources.ftp.GraftFtpsFileSystem")
-      case "sftp" => ("gsftp", "graft.sources.ssh.GraftSftpFileSystem")
-      case _ => ("gftp", "graft.sources.ftp.GraftFtpFileSystem")
-    }
-    conf.set(s"fs.$scheme.impl", impl)
+    val scheme = "g" + a.protocol
     conf.set(s"fs.$scheme.impl.disable.cache", "true")
     conf.set(s"fs.$scheme.user", a.username)
     conf.set(s"fs.$scheme.password", a.password)
@@ -156,9 +153,9 @@ object Blueprints {
     * `.collect()` manifest died here while the copy itself would not.
     */
   private[blueprints] def planMatchedDF(
-      matched: org.apache.spark.sql.DataFrame, pattern: String,
+      matched: DataFrame, pattern: String,
       destFolder: String, destName: Option[String],
-      enumerateAll: Boolean): org.apache.spark.sql.DataFrame = {
+      enumerateAll: Boolean): DataFrame = {
     FileOps.requireMatchesDF(matched, pattern)
     FileOps.planTransfersDF(matched, destFolder, destName, enumerateAll)
   }
@@ -191,10 +188,10 @@ object Upload {
       if (!FileOps.isFile(spark, "file:///", src))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no local file at $src")
-      val transfers = Seq(Transfer(src,
-        PathUtils.determineDestinationFullPath(
-          a.destinationFolderName, a.destinationFileName, src)))
-      FileOps.bulkCopy(spark, transfers, "file:///", dst,
+      import spark.implicits._
+      val plan = Seq((src, PathUtils.determineDestinationFullPath(
+        a.destinationFolderName, a.destinationFileName, src))).toDF("src", "dst")
+      FileOps.bulkCopyDF(plan, "file:///", dst,
         retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
     }
   }
@@ -232,10 +229,10 @@ object Download {
       if (!FileOps.exists(spark, src, s"/$p"))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no file at $p on ${a.host}")
-      val transfers = Seq(Transfer(s"/$p",
-        PathUtils.determineDestinationFullPath(
-          localBase, a.destinationFileName, p)))
-      FileOps.bulkCopy(spark, transfers, src, "file:",
+      import spark.implicits._
+      val plan = Seq((s"/$p", PathUtils.determineDestinationFullPath(
+        localBase, a.destinationFileName, p))).toDF("src", "dst")
+      FileOps.bulkCopyDF(plan, src, "file:",
         retries = a.retries, backoffMs = a.backoffMs, resume = a.resume)
     }
   }
@@ -260,9 +257,7 @@ object Move {
         a.sourceFileName, a.destinationFolderName, a.destinationFileName,
         enumerateAll = false)
       FileOps.bulkMove(spark, uri,
-        plan.withColumn("dst", org.apache.spark.sql.functions
-          .concat(org.apache.spark.sql.functions.lit("/"),
-            org.apache.spark.sql.functions.col("dst"))),
+        plan.withColumn("dst", concat(lit("/"), col("dst"))),
         retries = a.retries, backoffMs = a.backoffMs)
     } else {
       val src = "/" + PathUtils.combine(srcFolder, a.sourceFileName)
@@ -298,7 +293,8 @@ object Delete {
       if (!FileOps.exists(spark, uri, p))
         throw GraftFsError(ErrorCodes.NoMatchesFound,
           s"no file at $p on ${a.host}")
-      FileOps.bulkDelete(spark, uri, Seq(p))
+      import spark.implicits._
+      FileOps.bulkDeleteDF(spark, uri, Seq(p).toDF("path"))
     }
   }
 

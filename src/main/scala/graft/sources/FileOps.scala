@@ -33,16 +33,8 @@ object FileOps {
   }
 
   /** Guard: a matching stage that found nothing is exit-200 in the
-    * reference (upload_file.py / download_file.py main flow).
-    */
-  def requireMatches(matched: Seq[String], pattern: String): Seq[String] =
-    if (matched.isEmpty)
-      throw GraftFsError(ErrorCodes.NoMatchesFound,
-        s"no files found matching '$pattern'")
-    else matched
-
-  /** Distributed twin of [[requireMatches]]: one count aggregate — 8
-    * bytes to the driver instead of the matched path list.
+    * reference (upload_file.py / download_file.py main flow). One count
+    * aggregate — 8 bytes to the driver instead of the matched path list.
     */
   def requireMatchesDF(matched: DataFrame, pattern: String): Long = {
     val n = matched.count()
@@ -78,7 +70,7 @@ object FileOps {
     * recurses on a task stack, so a 10⁴-deep tree can't overflow it).
     * The result STAYS distributed — the manifest is a DataFrame over
     * the walk's RDDs, never `.collect()`ed; at 10⁷–10⁸ files it feeds
-    * bulkCopy partition-by-partition without materializing on the
+    * [[bulkCopyDF]] partition-by-partition without materializing on the
     * driver. Per level the only driver work is an isEmpty probe on the
     * (tiny, dirs-only) frontier RDD.
     */
@@ -111,7 +103,7 @@ object FileOps {
     while (!frontier.isEmpty()) {
       val level = frontier.mapPartitions { paths =>
         paths.flatMap { p =>
-          val f = FileSystem.newInstance(new URI(p), conf.value)
+          val f = fs(p, conf.value)
           val listed: Array[(String, FileEntry)] =
             try f.listStatus(new Path(p)).map { st =>
               (st.getPath.toString,
@@ -145,38 +137,17 @@ object FileOps {
   def matchFullPath(manifest: DataFrame, pattern: String): DataFrame =
     manifest.filter(!col("is_dir") && regexp_like(col("path"), lit(pattern)))
 
-  /** Transfer spec: one source file → one destination path. */
-  case class Transfer(src: String, dst: String)
-
-  /** Plan destination names for a set of matched sources: explicit
-    * destination name is enumerated `name_N.ext` on multi-match
-    * (upload_file.py:242-253), otherwise each source keeps its
-    * basename under the destination folder.
-    */
-  def planTransfers(
-      sources: Seq[String],
-      destinationFolder: String,
-      destinationFileName: Option[String]): Seq[Transfer] = {
-    val multi = sources.lengthCompare(1) > 0
-    sources.zipWithIndex.map { case (src, i) =>
-      Transfer(src, PathUtils.determineDestinationFullPath(
-        destinationFolder, destinationFileName, src,
-        if (multi && destinationFileName.isDefined) Some(i + 1) else None))
-    }
-  }
-
-  /** Distributed transfer planning over a matched manifest — the
-    * driver-collect-free twin of [[planTransfers]]/the blueprints'
-    * enumerated plan: the matched paths STAY a DataFrame (at 10⁸
-    * matches the old collect died where the copy itself wouldn't).
-    * Enumeration semantics are preserved exactly: an explicit
-    * destination name is numbered by the file's GLOBAL PATH-SORTED
-    * rank via `Distributed.orderedPrefix` (range partition +
-    * broadcast prefix offsets — never a single-partition window);
-    * with `enumerateAll` (upload/download regex semantics,
-    * upload_file.py:242-253) every match is numbered, otherwise
-    * (move, move_file.py:168-173) only when more than one matched —
-    * `total_w` from the same pass decides, no extra count job.
+  /** Transfer planning over a matched manifest: one (src, dst) row per
+    * match. The matched paths STAY a DataFrame (at 10⁸ matches a
+    * driver-side plan dies where the copy itself wouldn't). An explicit
+    * destination name is enumerated `name_N.ext`, numbered by the
+    * file's GLOBAL PATH-SORTED rank via `Distributed.orderedPrefix`
+    * (range partition + broadcast prefix offsets — never a
+    * single-partition window); with `enumerateAll` (upload/download
+    * regex semantics, upload_file.py:242-253) every match is numbered,
+    * otherwise (move, move_file.py:168-173) only when more than one
+    * matched — `total_w` from the same pass decides, no extra count
+    * job.
     * Without an explicit name each source keeps its basename.
     */
   def planTransfersDF(matched: DataFrame, destinationFolder: String,
@@ -238,11 +209,13 @@ object FileOps {
     throw lastErr
   }
 
-  /** Distributed bulk copy between any two Hadoop filesystems: the
-    * transfer list is partitioned across executors; each partition
-    * opens one source FS + one destination FS and streams bytes.
-    * `dstUriPrefix` anchors relative destinations (e.g.
-    * "file:/tmp/out" or "gftp://host:21").
+  /** Distributed bulk copy between any two Hadoop filesystems over a
+    * (src, dst) plan — the blueprints' copy path: the plan feeds the
+    * copy partition-by-partition and never materializes on the driver;
+    * each partition opens one source FS + one destination FS and
+    * streams bytes. `dstUriPrefix` anchors relative destinations (e.g.
+    * "file:/tmp/out" or "gftp://host:21"); `create` makes the
+    * destination's parent directories.
     *
     * `retries` re-runs an individual FILE's copy on transient errors
     * (fresh source/destination streams each attempt; `create`
@@ -260,29 +233,6 @@ object FileOps {
     * each attempt re-probes the sizes and continues from wherever the
     * previous attempt stopped.
     */
-  def bulkCopy(
-      spark: SparkSession,
-      transfers: Seq[Transfer],
-      srcUriPrefix: String,
-      dstUriPrefix: String,
-      parallelism: Int = 32,
-      retries: Int = 0,
-      backoffMs: Long = 1000L,
-      resume: Boolean = false): Unit = {
-    if (transfers.isEmpty) return
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    spark.sparkContext
-      .parallelize(transfers, math.min(transfers.size, parallelism))
-      .foreachPartition(
-        copyPartition(conf, srcUriPrefix, dstUriPrefix, retries,
-          backoffMs, resume))
-  }
-
-  /** [[bulkCopy]] over a DISTRIBUTED transfer plan (src, dst rows) —
-    * the manifest path for the blueprint CLIs' regex flows: matched
-    * paths feed the copy partition-by-partition and never materialize
-    * on the driver.
-    */
   def bulkCopyDF(
       transfers: DataFrame,
       srcUriPrefix: String,
@@ -294,8 +244,7 @@ object FileOps {
     import spark.implicits._
     val conf = new SerializableConfiguration(hadoopConf(spark))
     transfers.select(col("src"), col("dst")).as[(String, String)]
-      .rdd.map { case (s, d) => Transfer(s, d) }
-      .foreachPartition(
+      .rdd.foreachPartition(
         copyPartition(conf, srcUriPrefix, dstUriPrefix, retries,
           backoffMs, resume))
   }
@@ -309,21 +258,18 @@ object FileOps {
       dstUriPrefix: String,
       retries: Int,
       backoffMs: Long,
-      resume: Boolean)(it: Iterator[Transfer]): Unit = {
+      resume: Boolean)(it: Iterator[(String, String)]): Unit = {
         // a bare-scheme prefix ("file:") needs a root path to be a URI
-        def asUri(p: String) = new URI(if (p.endsWith(":")) p + "/" else p)
-        val sfs = FileSystem.newInstance(asUri(srcUriPrefix), conf.value)
-        val dfs = FileSystem.newInstance(asUri(dstUriPrefix), conf.value)
-        sfs.setVerifyChecksum(false)
-        dfs.setWriteChecksum(false)
-        try it.foreach { t =>
+        def asUri(p: String) = if (p.endsWith(":")) p + "/" else p
+        val sfs = fs(asUri(srcUriPrefix), conf.value)
+        val dfs = fs(asUri(dstUriPrefix), conf.value)
+        try it.foreach { case (srcName, dstName) =>
           // absolute destinations append directly to the scheme/root
-          val joined = if (t.dst.startsWith("/")) s"$dstUriPrefix${t.dst}"
-            else s"$dstUriPrefix/${t.dst}"
+          val joined = if (dstName.startsWith("/")) s"$dstUriPrefix$dstName"
+            else s"$dstUriPrefix/$dstName"
           val dst = new Path(joined.replaceAll("(?<!:)//+", "/"))
+          val src = new Path(srcName)
           withRetries(retries, backoffMs) { () =>
-            val parent = dst.getParent
-            if (parent != null && !dfs.exists(parent)) dfs.mkdirs(parent)
             // resume probe: sizes re-checked on every attempt, so a
             // retry continues from wherever the last attempt died
             val dstLen =
@@ -333,11 +279,11 @@ object FileOps {
                 if (s.isFile) s.getLen else -1L
               } catch { case _: java.io.FileNotFoundException => -1L }
             val srcLen =
-              if (dstLen > 0) sfs.getFileStatus(new Path(t.src)).getLen
+              if (dstLen > 0) sfs.getFileStatus(src).getLen
               else -1L
             if (dstLen > 0 && dstLen == srcLen) () // already complete
             else if (dstLen > 0 && dstLen < srcLen) {
-              val in = sfs.open(new Path(t.src))
+              val in = sfs.open(src)
               try {
                 in.seek(dstLen) // REST offset over gftp, O(1)
                 // ChecksumFileSystem (local) can't append; its raw fs can
@@ -351,7 +297,7 @@ object FileOps {
                 finally out.close()
               } finally in.close()
             } else {
-              val in = sfs.open(new Path(t.src))
+              val in = sfs.open(src)
               try {
                 val out = dfs.create(dst, true)
                 try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
@@ -424,34 +370,34 @@ object FileOps {
     finally f.close()
   }
 
-  /** Single-file move (rename) — move_file.py:96; a failed rename is
-    * the reference's exit-202 condition (move_file.py:102).
+  /** Rename `src` to `dst`, creating `dst`'s parent first
+    * (move_file.py:96); a failed rename is the reference's exit-202
+    * condition (move_file.py:102).
     */
+  private def renameOrExit(f: FileSystem, src: String, dst: String): Unit = {
+    val dstPath = new Path(dst)
+    val parent = dstPath.getParent
+    if (parent != null) f.mkdirs(parent)
+    // some FileSystem impls signal a missing source by exception,
+    // others by returning false — both are the reference's exit-202
+    val renamed =
+      try f.rename(new Path(src), dstPath)
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!renamed)
+      throw GraftFsError(ErrorCodes.MoveError, s"could not move $src -> $dst")
+  }
+
+  /** Single-file move (rename), driver-side. */
   def move(spark: SparkSession, uri: String, src: String, dst: String): Boolean = {
     val f = fs(uri, hadoopConf(spark))
-    try {
-      val dstPath = new Path(dst)
-      val parent = dstPath.getParent
-      if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-      // some FileSystem impls signal a missing source by exception,
-      // others by returning false — both are the reference's exit-202
-      val renamed =
-        try f.rename(new Path(src), dstPath)
-        catch { case _: java.io.FileNotFoundException => false }
-      if (!renamed)
-        throw GraftFsError(ErrorCodes.MoveError,
-          s"could not move $src -> $dst")
-      true
-    } finally f.close()
+    try { renameOrExit(f, src, dst); true } finally f.close()
   }
 
   /** Distributed bulk move (rename) over a (src, dst) plan — the
     * manifest path for the Move blueprint's regex flow: one FS handle
-    * per partition, parent dirs auto-created (move_file.py:96), a
-    * failed rename throws the reference's exit-202 taxonomy error
-    * (surfaces through the Spark job to the CLI shell). Transient
-    * errors retry per file; the 202 itself never retries
-    * ([[withRetries]]' taxonomy contract).
+    * per partition; the exit-202 taxonomy error surfaces through the
+    * Spark job to the CLI shell. Transient errors retry per file; the
+    * 202 itself never retries ([[withRetries]]' taxonomy contract).
     */
   def bulkMove(spark: SparkSession, uri: String, moves: DataFrame,
       retries: Int = 0, backoffMs: Long = 1000L): Unit = {
@@ -459,47 +405,23 @@ object FileOps {
     val conf = new SerializableConfiguration(hadoopConf(spark))
     moves.select(col("src"), col("dst")).as[(String, String)]
       .rdd.foreachPartition { it =>
-        val f = FileSystem.newInstance(new URI(uri), conf.value)
+        val f = fs(uri, conf.value)
         try it.foreach { case (src, dst) =>
-          withRetries(retries, backoffMs) { () =>
-            val dstPath = new Path(dst)
-            val parent = dstPath.getParent
-            if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-            val renamed =
-              try f.rename(new Path(src), dstPath)
-              catch { case _: java.io.FileNotFoundException => false }
-            if (!renamed)
-              throw GraftFsError(ErrorCodes.MoveError,
-                s"could not move $src -> $dst")
-          }
+          withRetries(retries, backoffMs)(() => renameOrExit(f, src, dst))
         } finally f.close()
       }
   }
 
-  /** Bulk delete, distributed — delete_file.py:76. */
-  def bulkDelete(spark: SparkSession, uri: String, paths: Seq[String],
-      parallelism: Int = 32): Unit = {
-    if (paths.isEmpty) return
-    val conf = new SerializableConfiguration(hadoopConf(spark))
-    spark.sparkContext.parallelize(paths, math.min(paths.size, parallelism))
-      .foreachPartition { it: Iterator[String] =>
-        val f = FileSystem.newInstance(new URI(uri), conf.value)
-        f.setWriteChecksum(false); f.setVerifyChecksum(false)
-        try it.foreach(p => f.delete(new Path(p), false))
-        finally f.close()
-      }
-  }
-
-  /** [[bulkDelete]] over a distributed path manifest (`path` column) —
-    * matched paths never collect to the driver.
+  /** Bulk delete, distributed — delete_file.py:76 — over a path
+    * manifest (`path` column): matched paths never collect to the
+    * driver.
     */
   def bulkDeleteDF(spark: SparkSession, uri: String,
       paths: DataFrame): Unit = {
     import spark.implicits._
     val conf = new SerializableConfiguration(hadoopConf(spark))
     paths.select(col("path")).as[String].rdd.foreachPartition { it =>
-      val f = FileSystem.newInstance(new URI(uri), conf.value)
-      f.setWriteChecksum(false); f.setVerifyChecksum(false)
+      val f = fs(uri, conf.value)
       try it.foreach(p => f.delete(new Path(p), false))
       finally f.close()
     }

@@ -42,7 +42,7 @@ import SftpProto._
 final class SftpClient(host: String, port: Int = 22, user: String,
     password: String, expectedHostKey: Option[Array[Byte]] = None,
     rekeyBytes: Long = 1L << 30,
-    identity: Option[java.security.KeyPair] = None) {
+    identity: Option[java.security.KeyPair] = None) extends AutoCloseable {
 
   private val sock = new Socket(host, port)
   sock.setTcpNoDelay(true)

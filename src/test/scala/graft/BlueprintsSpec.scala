@@ -98,6 +98,17 @@ class BlueprintsSpec extends SparkSpec {
     assert(code === 0)
     assert(!Files.exists(ftpRoot.resolve("data/del1.tmp")))
     assert(!Files.exists(ftpRoot.resolve("data/del2.tmp")))
+    // exact match removes the one named file; a missing name is 200
+    // (delete_file.py:151)
+    Files.writeString(ftpRoot.resolve("data/del3.tmp"), "d\n")
+    def exact(name: String): Int = Delete.run(spark, base(
+      "--file-name-match-type", "exact_match",
+      "--source-file-name", name,
+      "--source-folder-name", "data"))
+    assert(exact("del3.tmp") === 0)
+    assert(!Files.exists(ftpRoot.resolve("data/del3.tmp")))
+    assert(Files.exists(ftpRoot.resolve("data/one.csv")))
+    assert(exact("del3.tmp") === 200)
   }
 
   test("exit 3: bad credentials (reference EXIT_CODE_INCORRECT_CREDENTIALS)") {

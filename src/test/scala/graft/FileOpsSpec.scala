@@ -74,18 +74,8 @@ class FileOpsSpec extends SparkSpec {
       FileOps.listRecursive(spark, s"file:$root"), "inner").count() === 1)
   }
 
-  test("planTransfers enumerates only on multi-match with explicit name") {
-    val t1 = FileOps.planTransfers(Seq("x/a.csv"), "dst", Some("out.csv"))
-    assert(t1.map(_.dst) === Seq("dst/out.csv"))
-    val t2 = FileOps.planTransfers(Seq("x/a.csv", "y/b.csv"), "dst",
-      Some("out.csv"))
-    assert(t2.map(_.dst) === Seq("dst/out_1.csv", "dst/out_2.csv"))
-    val t3 = FileOps.planTransfers(Seq("x/a.csv", "y/b.csv"), "dst", None)
-    assert(t3.map(_.dst) === Seq("dst/a.csv", "dst/b.csv"))
-  }
-
-  test("planTransfersDF (distributed, collect-free) preserves planTransfers' " +
-      "enumeration semantics") {
+  test("planTransfersDF (distributed, collect-free) enumerates an explicit " +
+      "name by global path rank, only on multi-match for move") {
     import spark.implicits._
     val df = Seq("x/b.csv", "x/a.csv", "y/c.csv").toDF("path")
     def asPairs(p: org.apache.spark.sql.DataFrame) =
@@ -115,9 +105,8 @@ class FileOpsSpec extends SparkSpec {
     val dst = Files.createTempDirectory("graft_dst")
     val matched = FileOps.matchBasename(
       FileOps.listRecursive(spark, s"file:$root"), "\\.csv$")
-      .select("path").collect().map(_.getString(0)).toSeq.sorted
-    val plan = FileOps.planTransfers(matched, "up", None)
-    FileOps.bulkCopy(spark, plan, s"file:$root", s"file:$dst")
+    val plan = FileOps.planTransfersDF(matched, "up", None, enumerateAll = true)
+    FileOps.bulkCopyDF(plan, s"file:$root", s"file:$dst")
     val copied = Files.list(dst.resolve("up")).toArray.map(_.toString).sorted
     assert(copied.map(p => Paths.get(p).getFileName.toString).toSeq
       === Seq("a.csv", "c.csv", "d.csv"))
@@ -180,8 +169,9 @@ class FileOpsSpec extends SparkSpec {
       s"$root/moved/renamed.txt"))
     assert(Files.exists(root.resolve("moved/renamed.txt")))
     assert(!Files.exists(root.resolve("b.txt")))
-    FileOps.bulkDelete(spark, s"file:$root",
-      Seq(s"$root/a.csv", s"$root/sub/c.csv"))
+    import spark.implicits._
+    FileOps.bulkDeleteDF(spark, s"file:$root",
+      Seq(s"$root/a.csv", s"$root/sub/c.csv").toDF("path"))
     assert(!Files.exists(root.resolve("a.csv")))
     assert(!Files.exists(root.resolve("sub/c.csv")))
   }
@@ -191,9 +181,8 @@ class FileOpsSpec extends SparkSpec {
     // 200: a matching stage with zero hits
     val hits = FileOps.matchBasename(
       FileOps.listRecursive(spark, s"file:$root"), "\\.nope$")
-      .select("path").collect().map(_.getString(0)).toSeq
     val e200 = intercept[FileOps.GraftFsError] {
-      FileOps.requireMatches(hits, "\\.nope$")
+      FileOps.requireMatchesDF(hits, "\\.nope$")
     }
     assert(e200.code === FileOps.ErrorCodes.NoMatchesFound)
     // 201: listing a source folder that does not exist

@@ -20,8 +20,6 @@ class FtpSpec extends SparkSpec {
   private def ftpUri = s"gftp://u:p@127.0.0.1:${server.port}"
 
   private def withGftp(): Unit = {
-    spark.sparkContext.hadoopConfiguration.set("fs.gftp.impl",
-      "graft.sources.ftp.GraftFtpFileSystem")
     // FileSystem instances are keyed per (scheme, authority); disable
     // the cache so each test sees fresh state
     spark.sparkContext.hadoopConfiguration.set("fs.gftp.impl.disable.cache",
@@ -135,27 +133,25 @@ class FtpSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("graft_resume")
     val dstFile = outDir.resolve("big.bin")
     Files.write(dstFile, payload.take(15000))
+    import spark.implicits._
+    def resume(src: String, dst: String, from: String, to: String): Unit =
+      FileOps.bulkCopyDF(Seq((src, dst)).toDF("src", "dst"), from, to,
+        resume = true)
     val before = server.restCount.get()
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer("/data/big.bin", dstFile.toString)),
-      ftpUri, "file:", resume = true)
+    resume("/data/big.bin", dstFile.toString, ftpUri, "file:")
     assert(java.util.Arrays.equals(Files.readAllBytes(dstFile), payload),
       "resumed download corrupted the file")
     assert(server.restCount.get() > before, "source seek did not use REST")
     // already-complete destination: second resume is a no-op that
     // leaves the bytes intact
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer("/data/big.bin", dstFile.toString)),
-      ftpUri, "file:", resume = true)
+    resume("/data/big.bin", dstFile.toString, ftpUri, "file:")
     assert(java.util.Arrays.equals(Files.readAllBytes(dstFile), payload))
     // upload: remote destination holds a 10000-byte prefix; resume
     // appends the tail via REST+STOR (gftp append)
     Files.write(ftpRoot.resolve("data/up.bin"), payload.take(10000))
     val local = outDir.resolve("up_src.bin")
     Files.write(local, payload)
-    FileOps.bulkCopy(spark,
-      Seq(FileOps.Transfer(local.toString, "/data/up.bin")),
-      "file:", ftpUri, resume = true)
+    resume(local.toString, "/data/up.bin", "file:", ftpUri)
     assert(java.util.Arrays.equals(
       Files.readAllBytes(ftpRoot.resolve("data/up.bin")), payload),
       "resumed upload corrupted the remote file")
@@ -176,12 +172,14 @@ class FtpSpec extends SparkSpec {
   test("download blueprint: regex match over FTP tree → distributed copy to local") {
     withGftp()
     val manifest = FileOps.listRecursive(spark, ftpUri)
-    val matched = FileOps.matchBasename(manifest, "\\.csv$")
+    val matchedDF = FileOps.matchBasename(manifest, "\\.csv$")
+    val matched = matchedDF
       .select("path").collect().map(_.getString(0)).toSeq.sorted
     assert(matched === Seq("/data/one.csv", "/data/two.csv"))
     val dst = Files.createTempDirectory("graft_dl")
-    FileOps.bulkCopy(spark,
-      FileOps.planTransfers(matched, "got", None), ftpUri, s"file:$dst")
+    FileOps.bulkCopyDF(
+      FileOps.planTransfersDF(matchedDF, "got", None, enumerateAll = true),
+      ftpUri, s"file:$dst")
     assert(Files.readString(dst.resolve("got/one.csv")) === "id,v\n1,a\n2,b\n")
     assert(Files.readString(dst.resolve("got/two.csv")) === "id,v\n3,c\n")
   }
@@ -191,9 +189,11 @@ class FtpSpec extends SparkSpec {
     val src = Files.createTempDirectory("graft_ul")
     Files.writeString(src.resolve("x.csv"), "a\n")
     Files.writeString(src.resolve("y.csv"), "b\n")
-    val files = Seq(s"$src/x.csv", s"$src/y.csv")
-    FileOps.bulkCopy(spark,
-      FileOps.planTransfers(files, "up/in", Some("out.csv")),
+    import spark.implicits._
+    val files = Seq(s"$src/x.csv", s"$src/y.csv").toDF("path")
+    FileOps.bulkCopyDF(
+      FileOps.planTransfersDF(files, "up/in", Some("out.csv"),
+        enumerateAll = false),
       s"file:$src", ftpUri)
     assert(Files.readString(ftpRoot.resolve("up/in/out_1.csv")) === "a\n")
     assert(Files.readString(ftpRoot.resolve("up/in/out_2.csv")) === "b\n")
@@ -204,7 +204,8 @@ class FtpSpec extends SparkSpec {
     Files.writeString(ftpRoot.resolve("data/mv.txt"), "m\n")
     assert(FileOps.move(spark, ftpUri, "/data/mv.txt", "/moved/mv2.txt"))
     assert(Files.readString(ftpRoot.resolve("moved/mv2.txt")) === "m\n")
-    FileOps.bulkDelete(spark, ftpUri, Seq("/moved/mv2.txt"))
+    import spark.implicits._
+    FileOps.bulkDeleteDF(spark, ftpUri, Seq("/moved/mv2.txt").toDF("path"))
     assert(!Files.exists(ftpRoot.resolve("moved/mv2.txt")))
   }
 

@@ -101,7 +101,6 @@ class FtpsSpec extends SparkSpec {
 
   private def configureGftps(trust: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.gftps.impl", "graft.sources.ftp.GraftFtpsFileSystem")
     conf.set("fs.gftps.impl.disable.cache", "true")
     conf.unset("fs.gftps.insecure")
     conf.unset("fs.gftps.truststore")

@@ -204,7 +204,6 @@ class SftpSpec extends SparkSpec {
           "--protocol", "sftp", "--source-file-name-match-type",
           "regex_match", "--source-folder-name", "big") ++ extra).toArray
       val conf = spark.sparkContext.hadoopConfiguration
-      conf.set("fs.gsftp.impl", "graft.sources.ssh.GraftSftpFileSystem")
       conf.set("fs.gsftp.impl.disable.cache", "true")
       conf.set("fs.gsftp.user", "tester")
       conf.set("fs.gsftp.password", "secret")
@@ -222,12 +221,42 @@ class SftpSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("bulkCopyDF resume over gsftp://: a partial download and a partial upload complete from their offsets") {
+    val root = freshDir()
+    val srv = startServer(root)
+    try {
+      val conf = spark.sparkContext.hadoopConfiguration
+      conf.set("fs.gsftp.impl.disable.cache", "true")
+      conf.set("fs.gsftp.user", "tester")
+      conf.set("fs.gsftp.password", "secret")
+      val uri = s"gsftp://127.0.0.1:${srv.port}"
+      import spark.implicits._
+      def resume(src: String, dst: String, from: String, to: String): Unit =
+        graft.sources.FileOps.bulkCopyDF(Seq((src, dst)).toDF("src", "dst"),
+          from, to, resume = true)
+      val payload = Array.tabulate[Byte](200000)(i => (i % 251 + 1).toByte)
+      // each partial destination holds zeros: a resumed copy keeps
+      // them and writes only the tail, a restarted one overwrites them
+      val local = freshDir()
+      Files.createDirectories(root.resolve("data"))
+      Files.write(root.resolve("data/big.bin"), payload)
+      Files.write(local.resolve("big.bin"), new Array[Byte](70000))
+      resume("/data/big.bin", local.resolve("big.bin").toString, uri, "file:")
+      assert(Files.readAllBytes(local.resolve("big.bin")).toSeq ===
+        (new Array[Byte](70000) ++ payload.drop(70000)).toSeq)
+      Files.write(local.resolve("up.bin"), payload)
+      Files.write(root.resolve("data/up.bin"), new Array[Byte](30000))
+      resume(local.resolve("up.bin").toString, "/data/up.bin", "file:", uri)
+      assert(Files.readAllBytes(root.resolve("data/up.bin")).toSeq ===
+        (new Array[Byte](30000) ++ payload.drop(30000)).toSeq)
+    } finally srv.close()
+  }
+
   test("gsftp://: Spark reads and writes real formats through the adapter; parquet footer seek is native") {
     val root = freshDir()
     val srv = startServer(root)
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      conf.set("fs.gsftp.impl", "graft.sources.ssh.GraftSftpFileSystem")
       conf.set("fs.gsftp.impl.disable.cache", "true")
       conf.set("fs.gsftp.user", "tester")
       conf.set("fs.gsftp.password", "secret")
